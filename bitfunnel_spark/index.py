@@ -89,36 +89,20 @@ class FullTextIndex:
         return self._idf_map
 
     def idf_for_terms(self, terms) -> dict:
-        """{term_string: idf} for a query's BODY terms — via the resident
-        map, else one filtered collect over the key dictionary. When the
-        dictionary is the persisted bucket-partitioned layout
+        """{term_string: idf} for a query's BODY terms — the string-keyed
+        view of :meth:`idf_for_keys`."""
+        body = {("body", t) for s, t in terms if s == "body"}
+        return {t: v for (_s, t), v in self.idf_for_keys(body).items()}
+
+    def idf_for_keys(self, terms) -> dict:
+        """{(stream, term): idf} for a query's keys — ALL streams (the
+        field-weighted scoring path needs non-body idf too) — via the
+        resident map, else one filtered collect over the key dictionary.
+        When the dictionary is the persisted bucket-partitioned layout
         (statistics.write_dictionary), the added ``term_bucket`` predicate
         prunes to ≤ |terms| partition directories and the ``term_key``
         IN-list prunes row groups — a point lookup regardless of
         dictionary size (the past-driver-cap serve path)."""
-        from bitfunnel_spark.operators.segments import _term_bucket_py, _term_key_py
-
-        body = sorted({t for s, t in terms if s == "body"})
-        keys = {t: _term_key_py("body", t) for t in body}
-        m = self.idf_map()
-        if m is not None:
-            return {t: m[k] for t, k in keys.items() if k in m}
-        ks = self._key_stats_df()
-        pred = F.col("term_key").isin(list(keys.values()))
-        if "term_bucket" in ks.columns:
-            buckets = sorted(
-                {_term_bucket_py(k, self.config.term_buckets) for k in keys.values()}
-            )
-            pred = F.col("term_bucket").isin(buckets) & pred
-        rows = ks.filter(pred).select("term_key", "idf").collect()
-        by_key = {int(r[0]): float(r[1]) for r in rows}
-        return {t: by_key[k] for t, k in keys.items() if k in by_key}
-
-    def idf_for_keys(self, terms) -> dict:
-        """{(stream, term): idf} for a query's keys — ALL streams (the
-        field-weighted scoring path needs non-body idf too). Same lookup
-        machinery as idf_for_terms: resident map when it fits, else one
-        bucket-pruned filtered collect."""
         from bitfunnel_spark.operators.segments import _term_bucket_py, _term_key_py
 
         pairs = sorted({(s, t) for s, t in terms})
@@ -140,21 +124,30 @@ class FullTextIndex:
     def ctf_for_keys(self, terms) -> dict:
         """{(stream, term): collection term frequency} for a query's keys —
         the Lucene totalTermFreq statistic, needed by LM similarities
-        (plans/scoring.py). Aggregated per query from the postings table:
-        the `(stream, term) IN` predicate prunes the scan to just the
-        query's terms, the agg returns ≤ |terms| rows — a point lookup at
-        any corpus size (the dictionary intentionally doesn't denormalize
-        ctf; queries carrying it are rare)."""
-        pairs = sorted({(s, t) for s, t in terms})
-        key_col = F.concat_ws(":", F.col("stream"), F.col("term"))
-        rows = (
-            self.postings.withColumn("key", key_col)
-            .filter(F.col("key").isin([f"{s}:{t}" for s, t in pairs]))
+        (plans/scoring.py). Aggregated per query from the postings table
+        (:meth:`_ctf_frame`): a point lookup at any corpus size (the
+        dictionary intentionally doesn't denormalize ctf; queries carrying
+        it are rare)."""
+        rows = self._ctf_frame(terms).collect()
+        return {(r["stream"], r["term"]): int(r["ctf"]) for r in rows}
+
+    def _ctf_frame(self, terms) -> DataFrame:
+        """Per-key tf sums over the postings rows of ``terms``. The filter
+        is OR'd plain-column ``(stream, term)`` equalities, which a parquet
+        scan takes as pushed filters (row-group pruning on min/max stats);
+        the agg returns ≤ |terms| rows."""
+        from functools import reduce
+
+        pred = reduce(
+            lambda a, b: a | b,
+            [(F.col("stream") == s) & (F.col("term") == t) for s, t in sorted(set(terms))],
+            F.lit(False),
+        )
+        return (
+            self.postings.filter(pred)
             .groupBy("stream", "term")
             .agg(F.sum("tf").alias("ctf"))
-            .collect()
         )
-        return {(r["stream"], r["term"]): int(r["ctf"]) for r in rows}
 
     def body_total_tokens(self) -> int:
         """Total body tokens (Lucene sumTotalTermFreq of the body field) —

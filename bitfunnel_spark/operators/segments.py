@@ -137,19 +137,6 @@ def _encode_group(
     )
 
 
-def _encode_token_group(
-    pdf: pd.DataFrame, block_size: int, k1: float, b: float, avgdl: float,
-    rare_frac: float = 0.0, dense_frac: float = float("inf"),
-) -> pd.DataFrame:
-    """Fused-path group encode: rows are raw token OCCURRENCES; tf is
-    computed here (run-length over the sorted key) before block encoding —
-    the reduce side of the single-shuffle build."""
-    return _encode_frame(
-        pdf, has_tf=False, block_size=block_size, k1=k1, b=b, avgdl=avgdl,
-        rare_frac=rare_frac, dense_frac=dense_frac,
-    )
-
-
 def _encode_frame(
     pdf: pd.DataFrame, has_tf: bool, block_size: int, k1: float, b: float, avgdl: float,
     rare_frac: float = 0.0, dense_frac: float = float("inf"),
@@ -671,23 +658,6 @@ def merge_segment_blocks(
     return segments.groupBy("shard", "slice", "term_bucket").applyInPandas(
         fn, SEGMENT_SCHEMA
     )
-
-
-def write_segments(segments: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist partitioned by (shard, term_bucket): a query's term filter
-    prunes partitions; within a file, parquet min/max stats on `term` prune
-    row groups (rows are written term-clustered)."""
-    (
-        segments.repartition("shard", "term_bucket")
-        .sortWithinPartitions("term_key", "slice", "block_id")
-        .write.mode(mode)
-        .partitionBy("shard", "term_bucket")
-        .parquet(path)
-    )
-
-
-def read_segments(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def _row_encs(rows: pd.DataFrame) -> list[str]:

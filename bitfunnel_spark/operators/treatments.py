@@ -45,16 +45,6 @@ def treatment_of(df_col: Column, n_docs: int, config: BuildConfig) -> Column:
     )
 
 
-def treatment_of_py(df: int, n_docs: int, config: BuildConfig) -> str:
-    """Driver/kernel-side mirror of :func:`treatment_of`."""
-    frac = df / max(n_docs, 1)
-    if frac < config.rare_df_frac:
-        return RARE
-    if frac > config.dense_df_frac:
-        return DENSE
-    return MID
-
-
 # ---------------------------------------------------------------------------
 # TreatmentOptimal analogue: cost-model search over treatment thresholds.
 #

@@ -28,8 +28,9 @@ Two shapes:
 
 Both score candidates via ``score_selected``: per scoring term only the
 blocks whose [first_doc, last_doc] range contains a candidate are decoded
-(lazily, cached). Decoded-block counters in ``BlockCache.stats`` feed the
-per-query instrumentation (plans/profile) and the pruning regression tests.
+(lazily, cached). ``BlockCache.touched`` feeds the per-query counters the
+group kernel keeps (plans/kernel._make_kernel → plans/profile);
+``BlockCache.stats`` feeds the pruning regression tests.
 
 Determinism contract (same as plans/kernel.py): final scores round to 4 dp,
 order (score desc, doc_id asc). Pruning thresholds keep an EPS = 1e-4 margin
@@ -66,7 +67,9 @@ class BlockCache:
     Block metadata (first/last doc, max_partial) is materialized once per
     term, sorted by first_doc; block payloads decode on first touch and are
     cached — shared across the queries of a batch. ``stats`` counts decoded
-    vs total blocks (the pruning effectiveness signal)."""
+    vs total blocks (the pruning effectiveness signal); ``touched`` collects
+    the (key, block) pairs read since the caller last cleared it, cache hit
+    or miss — the per-query decode counter of a shared cache."""
 
     def __init__(self, raw: dict, stats: dict | None = None, bound: str = "bm25"):
         # ``bound`` selects the per-block upper-bound source: "bm25" reads
@@ -78,8 +81,11 @@ class BlockCache:
         self.raw = raw
         self.bound = bound
         self._meta: dict = {}
+        self._rows: dict = {}
         self._dec: dict = {}
+        self._span: dict = {}
         self._dec_tf: dict = {}
+        self.touched: set = set()
         self.stats = stats if stats is not None else {}
         self.stats.setdefault("blocks_decoded", 0)
         self.stats.setdefault("blocks_total", 0)
@@ -92,6 +98,7 @@ class BlockCache:
                 m = (_EMPTY, _EMPTY, _EMPTYF, [], [], _EMPTY, [], None, None)
             else:
                 rows = rows.sort_values("first_doc", kind="stable")
+                self._rows[key] = rows
                 encs = (
                     [x if x is not None else "vb" for x in rows["enc"]]
                     if "enc" in rows.columns
@@ -131,6 +138,7 @@ class BlockCache:
 
     def decode_block(self, key, bi: int):
         ck = (key, bi)
+        self.touched.add(ck)
         d = self._dec.get(ck)
         if d is None:
             from bitfunnel_spark.operators.codec import decode_doc_block
@@ -142,6 +150,34 @@ class BlockCache:
             self._dec[ck] = d
             self.stats["blocks_decoded"] += 1
         return d
+
+    def n_blocks(self, key) -> int:
+        return int(self.meta(key)[0].size)
+
+    def touch(self, key) -> None:
+        """Count every block of key as read (decoded outside the cache)."""
+        self.touched.update((key, bi) for bi in range(self.n_blocks(key)))
+
+    def span(self, key, lo: int | None = None, hi: int | None = None):
+        """(docs, tfs, partials) of key's blocks whose [first, last] range
+        meets [lo, hi] (every block when lo is None) — one batched
+        segments.decode_group call, memoized per block set."""
+        first, last = self.meta(key)[:2]
+        if first.size == 0:
+            return _EMPTY, _EMPTY, _EMPTYF
+        if lo is None:
+            bis = np.arange(first.size)
+        else:
+            bis = np.flatnonzero((last >= lo) & (first <= hi))
+        self.touched.update((key, int(bi)) for bi in bis)
+        ck = (key, None if bis.size == first.size else bis.tobytes())
+        out = self._span.get(ck)
+        if out is None:
+            from bitfunnel_spark.operators.segments import decode_group
+
+            out = decode_group(self._rows[key].iloc[bis])
+            self._span[ck] = out
+        return out
 
     def total_n(self, key) -> int:
         return int(self.meta(key)[5].sum())
@@ -773,13 +809,3 @@ def _and_units(units, scoring_keys, idf, k, cache, allow, deny, scorer, after=No
             kth = _kth(scores_l, k)
     return _topk_select(docs_l, scores_l, k)
 
-
-def units_all_keys(units) -> list:
-    """Every (stream, term) key a routed unit list touches (profiling)."""
-    out = []
-    for u in units:
-        if u[0] == "key":
-            out.append(u[1])
-        else:
-            out.extend(k for k, _w in u[1])
-    return sorted(set(out))

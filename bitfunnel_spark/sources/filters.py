@@ -16,14 +16,6 @@ from pyspark.sql import functions as F
 from bitfunnel_spark.functions.tokenizer import tokenize
 
 
-def random_filter(corpus: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """RandomDocumentFilter analogue. Deterministic given the seed AND the
-    partitioning; for partitioning-independent sampling use
-    `deterministic_filter` (hash-based), which is what distributed pipelines
-    should prefer."""
-    return corpus.sample(fraction=fraction, seed=seed)
-
-
 def fraction_threshold_hex(fraction: float) -> str:
     """8-hex-digit threshold such that P(md5_prefix < threshold) = fraction."""
     return format(int(fraction * 16**8), "08x")

@@ -59,3 +59,20 @@ def test_percolate(spark, corpus, index):
         want = {r["doc_id"] for r in index.match(q).collect()}
         assert by_q.get(qid, set()) == want, f"percolate mismatch for {q!r}"
     assert 2 not in by_q  # the absent-term query matches nothing
+
+
+def test_batch_refuses_restricted_copy(index):
+    """A doc-metadata restriction (`_restrict_docs`, the DSL range-filter
+    channel) is served by the declarative executor only: the batch paths
+    refuse a restricted index copy like the single-query kernel does,
+    instead of returning unfiltered results."""
+    import dataclasses
+
+    from bitfunnel_spark.plans.batch import match_many
+
+    idx2 = dataclasses.replace(index)
+    idx2._restrict_docs = index.doc_stats.select("doc_id").limit(5)
+    with pytest.raises(ValueError, match="declarative executor"):
+        idx2.search_many(["data", "dup | vector"], k=3).collect()
+    with pytest.raises(ValueError, match="declarative executor"):
+        match_many(idx2, ["data"]).collect()

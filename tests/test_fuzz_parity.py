@@ -22,11 +22,22 @@ def _rows(df):
     return [(r["doc_id"], round(r["score"], 4)) for r in df.collect()]
 
 
+def _batch_rows(index, log):
+    """search_many over the whole log, as per-query ranked row lists."""
+    by_q: dict = {}
+    for r in index.search_many(log, k=10).collect():
+        by_q.setdefault(r["query_id"], []).append((r["doc_id"], round(r["score"], 4)))
+    return [sorted(by_q.get(i, []), key=lambda t: (-t[1], t[0])) for i in range(len(log))]
+
+
 def test_generated_and_queries_mode_parity(fuzz_index):
-    for q in generate_query_log(fuzz_index.term_stats, 15, seed=11):
+    log = generate_query_log(fuzz_index.term_stats, 15, seed=11)
+    batch = _batch_rows(fuzz_index, log)
+    for q, c in zip(log, batch):
         a = _rows(fuzz_index.search(q, k=10, mode="kernel"))
         b = _rows(fuzz_index.search(q, k=10, mode="dataframe"))
         assert a == b, q
+        assert c == a, q
 
 
 def test_generated_or_and_not_parity(fuzz_index):
@@ -35,7 +46,9 @@ def test_generated_or_and_not_parity(fuzz_index):
     shaped = [t.replace(" ", " | ", 1) for t in pairs[:3]] + [
         t.replace(" ", " -", 1) for t in pairs[3:]
     ]
-    for q in shaped:
+    batch = _batch_rows(fuzz_index, shaped)
+    for q, c in zip(shaped, batch):
         a = _rows(fuzz_index.search(q, k=10, mode="kernel"))
         b = _rows(fuzz_index.search(q, k=10, mode="dataframe"))
         assert a == b, q
+        assert c == a, q

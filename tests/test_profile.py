@@ -82,3 +82,71 @@ def test_profile_many_rejects_non_prunable_similarity(prof_index):
 
     with pytest.raises(ValueError):
         profile_many(prof_index, ["data"], k=3, similarity="classic")
+
+
+# Per-query (blocks_total, blocks_decoded) at k=5 on prof_index for the
+# shapes of bench.py's PRUNE_BATTERY. Block-max decode counts are
+# deterministic: they move only when pruning or the block layout changes.
+PRUNE_COUNTERS = {
+    "dup the": (65, 27),
+    "dup a data": (121, 40),
+    "dup data the": (120, 45),
+    "vector dup": (63, 28),
+    "dup | the": (65, 61),
+    "dup | the | a": (122, 114),
+    "dup | vector | the": (119, 111),
+}
+
+
+def _counters(metrics, queries):
+    from bitfunnel_spark.plans.profile import summarize
+
+    return {
+        queries[r["query_id"]]: (r["blocks_total"], r["blocks_decoded"])
+        for r in summarize(metrics).collect()
+    }
+
+
+def test_profile_counters_pinned(prof_index):
+    from bitfunnel_spark.plans.profile import profile_many
+
+    queries = list(PRUNE_COUNTERS)
+    metrics, _ = profile_many(prof_index, queries, k=5)
+    assert _counters(metrics, queries) == PRUNE_COUNTERS
+    # third search_after page of "dup the": the min_partial head-skip drops
+    # the blocks whose every doc sits before the cursor
+    cursor = None
+    for _page in range(2):
+        hits = (
+            prof_index.search("dup the", k=5, mode="kernel") if cursor is None
+            else prof_index.search_after("dup the", cursor, k=5)
+        ).collect()
+        cursor = (float(hits[-1]["score"]), int(hits[-1]["doc_id"]))
+    metrics, _ = profile_many(prof_index, ["dup the"], k=5, after=cursor)
+    assert _counters(metrics, ["dup the"]) == {"dup the": (65, 19)}
+
+
+def test_profile_gram_phrase_counts_gram_blocks(spark, corpus):
+    """With grams indexed and positions off, a two-token phrase matches
+    through its gram term's posting list — in production and therefore in
+    the profile, whose counters include the gram term's blocks."""
+    from pyspark.sql import functions as F
+
+    from bitfunnel_spark import BuildConfig, FullTextIndex
+    from bitfunnel_spark.operators.segments import _term_key_py
+    from bitfunnel_spark.plans.profile import profile_many
+
+    idx = FullTextIndex.build_fused(
+        spark, corpus,
+        BuildConfig(n_slices=4, block_size=8, max_gram_size=2, positions=False),
+    )
+
+    def blocks(term):
+        return idx.segments.filter(F.col("term_key") == _term_key_py("body", term)).count()
+
+    gram = blocks("batch batch")
+    assert gram > 0
+    metrics, _ = profile_many(idx, ['"batch batch"'], k=10)
+    total, decoded = _counters(metrics, ["q"])["q"]
+    assert total == blocks("batch") + gram
+    assert decoded >= gram  # the gram list drives the phrase's candidates

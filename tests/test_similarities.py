@@ -100,6 +100,22 @@ def test_lmd_collection_stats_exact(index, duck):
     assert index.body_total_tokens() == int(total)
 
 
+def test_ctf_lookup_pushes_key_predicate(spark, index, tmp_path):
+    """The lm_dirichlet ctf lookup filters postings with plain-column
+    (stream, term) equalities, so a parquet postings table prunes the scan
+    with them (PushedFilters) instead of computing a key per row."""
+    import dataclasses
+
+    path = str(tmp_path / "postings")
+    index.postings.write.parquet(path)
+    idx2 = dataclasses.replace(index, postings=spark.read.parquet(path))
+    keys = {("body", "data"), ("body", "join")}
+    plan = idx2._ctf_frame(keys)._jdf.queryExecution().executedPlan().toString()
+    pushed = plan.split("PushedFilters: [", 1)[1].split("\n", 1)[0]
+    assert "EqualTo(term,data)" in pushed and "EqualTo(stream,body)" in pushed, plan
+    assert idx2.ctf_for_keys(keys) == index.ctf_for_keys(keys)
+
+
 def test_lmd_rejects_nonbody_scoring(index):
     # field-boosted non-body keys become scoring keys — LMD is body-only
     with pytest.raises(QueryPlanError):
