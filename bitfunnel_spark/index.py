@@ -42,6 +42,7 @@ class FullTextIndex:
     segments_positional: bool = True
     key_stats: DataFrame | None = None  # (term_key, df, idf, ...) serve dictionary
     _idf_map: dict | None = None  # driver-resident {term_key: idf} (lazy)
+    _blocks_map: dict | None = None  # {term_key: block rows}, loaded with _idf_map
     _idf_map_over_limit: bool = False  # memoized "dictionary too big" outcome
     tombstones: frozenset = frozenset()  # soft-deleted doc ids (delete_docs)
     facts: dict = field(default_factory=dict)  # name -> doc-id DataFrame (define_fact)
@@ -76,7 +77,9 @@ class FullTextIndex:
         per query. Returns None when the dictionary exceeds
         IDF_MAP_MAX_TERMS (the 10^12-doc path then uses per-query filtered
         lookups / a broadcast dictionary instead); that outcome is memoized
-        so the vocabulary count job runs at most once per index."""
+        so the vocabulary count job runs at most once per index. The same
+        collect loads the segment-derived dictionary's per-key block counts
+        (block_footprint)."""
         if self._idf_map_over_limit:
             return None
         if self._idf_map is None:
@@ -84,9 +87,28 @@ class FullTextIndex:
             if ks.count() > self.IDF_MAP_MAX_TERMS:
                 self._idf_map_over_limit = True
                 return None
-            rows = ks.select("term_key", "idf").collect()
+            has_blocks = "blocks" in ks.columns
+            rows = ks.select("term_key", "idf", *(["blocks"] if has_blocks else [])).collect()
             self._idf_map = {int(r[0]): float(r[1]) for r in rows}
+            if has_blocks:
+                self._blocks_map = {int(r[0]): int(r[2]) for r in rows}
         return self._idf_map
+
+    def block_footprint(self, keys) -> int | None:
+        """Σ segment block rows over (stream, term) ``keys`` — a key listed
+        twice counts twice — from the resident dictionary, before any job
+        runs; a key the index lacks has no blocks. None when unknown: the
+        dictionary carries no block counts (row-form build, term_stats
+        fallback), it is past IDF_MAP_MAX_TERMS, or a key is an indexed
+        fact (define_fact_indexed adds segment rows the dictionary was not
+        derived from)."""
+        from bitfunnel_spark.operators.segments import _term_key_py
+
+        if self.idf_map() is None or self._blocks_map is None:
+            return None
+        if any(s == "fact" and t in self.indexed_facts for s, t in keys):
+            return None
+        return sum(self._blocks_map.get(_term_key_py(s, t), 0) for s, t in keys)
 
     def idf_for_terms(self, terms) -> dict:
         """{term_string: idf} for a query's BODY terms — the string-keyed
@@ -326,13 +348,16 @@ class FullTextIndex:
     def prepare_serve(self, partitions: int | None = None) -> DataFrame:
         """Serve-start optimization: re-cache the segment store hash-
         partitioned by (shard, slice) — exactly the kernel's group key — so
-        EVERY query's ``groupBy(shard, slice).applyInPandas`` elides its
-        exchange (verified on the executed plan: the query side becomes
-        Filter → Sort → FlatMapGroupsInPandas straight over the cache scan,
-        zero Exchange). One index-sized shuffle paid once when the serving
-        session opens, instead of an all-to-all per query — on a cluster
-        this removes the only network stage of the query path, leaving
-        kernel tasks + a k-row-per-partition TakeOrdered collect.
+        every DISTRIBUTED-route query's ``groupBy(shard, slice).
+        applyInPandas`` elides its exchange (verified on the executed plan:
+        the query side becomes Filter → Sort → FlatMapGroupsInPandas
+        straight over the cache scan, zero Exchange). One index-sized
+        shuffle paid once when the serving session opens, instead of an
+        all-to-all per query — on a cluster this removes the only network
+        stage of the query path, leaving kernel tasks + a k-row-per-
+        partition TakeOrdered collect. Small top-k queries take the local
+        route instead (plans/kernel._query_groups) and only scan this
+        cache with their segment filter.
 
         The reference's analogue is loading slices into per-shard memory
         buffers before serving (SimpleIndex startup); build pipelines and

@@ -224,12 +224,16 @@ def term_stats(postings_df: DataFrame, n_docs: int, config: BuildConfig) -> Data
 
 
 def key_stats_from_segments(segments_df: DataFrame, n_docs: int, config: BuildConfig) -> DataFrame:
-    """(term_key, df, idf, idf_x10, treatment) — the SERVE-path dictionary,
-    derived purely from segment block metadata (df = Σ block n per key; an
-    agg over ~#blocks rows). No term strings anywhere — the reference's
-    TermTable is likewise hash-keyed (Term.h:44-47). The string-keyed
-    analytics dictionary is :func:`term_stats_from_segments`."""
-    out = segments_df.groupBy("term_key").agg(F.sum("n").cast("long").alias("df"))
+    """(term_key, df, blocks, idf, idf_x10, treatment) — the SERVE-path
+    dictionary, derived purely from segment block metadata (df = Σ block n
+    per key, blocks = the key's block rows; an agg over ~#blocks rows). No
+    term strings anywhere — the reference's TermTable is likewise hash-keyed
+    (Term.h:44-47). ``blocks`` is a query's footprint before any job runs
+    (FullTextIndex.block_footprint — the kernel's route rule). The
+    string-keyed analytics dictionary is :func:`term_stats_from_segments`."""
+    out = segments_df.groupBy("term_key").agg(
+        F.sum("n").cast("long").alias("df"), F.count("*").alias("blocks")
+    )
     idf = F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     idf_x10 = F.least(
         F.round(10.0 * F.log10(F.lit(float(n_docs)) / F.col("df"))), F.lit(60.0)
@@ -237,7 +241,7 @@ def key_stats_from_segments(segments_df: DataFrame, n_docs: int, config: BuildCo
     from bitfunnel_spark.operators.treatments import treatment_of
 
     return out.select(
-        "term_key", "df", idf.alias("idf"), idf_x10.alias("idf_x10"),
+        "term_key", "df", "blocks", idf.alias("idf"), idf_x10.alias("idf_x10"),
         treatment_of(F.col("df"), n_docs, config).alias("treatment"),
     )
 

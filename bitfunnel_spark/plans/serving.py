@@ -1327,6 +1327,19 @@ def explain(
     )
 
 
+def rank_rows(df: DataFrame, order: list, key: str, name: str) -> DataFrame:
+    """(``key``, ``name``) for a k-bounded frame — a top-k result: ``name``
+    is each row's 1-based position in ``order`` (row_number semantics,
+    Spark's own ordering), without a partition-less window, which would
+    move every row into one partition. The ≤k rows are collected and the
+    ranks come back as a driver-built frame."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    ids = [r[0] for r in df.orderBy(*order).select(key).collect()]
+    schema = StructType([df.schema[key], StructField(name, IntegerType(), False)])
+    return df.sparkSession.createDataFrame(list(zip(ids, range(1, len(ids) + 1))), schema)
+
+
 def hybrid_search(
     index, emb: DataFrame, query: str, query_vec_id: int, k: int = 10,
     k_each: int = 20, rrf_k: int = 60, mode: str = "kernel",
@@ -1348,15 +1361,15 @@ def hybrid_search(
     """
     from bitfunnel_spark.operators.similarity import brute_cosine_topk
 
-    bm = index.search(query, k=k_each, mode=mode)
-    w1 = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    bm = bm.select("doc_id", F.row_number().over(w1).alias("bm25_rank"))
+    bm = rank_rows(
+        index.search(query, k=k_each, mode=mode),
+        [F.desc("score"), F.asc("doc_id")], "doc_id", "bm25_rank",
+    )
     cs = brute_cosine_topk(emb, [int(query_vec_id)], k=k_each,
                            vec_col=vec_col, id_col=id_col)
-    w2 = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    cs = cs.select(
-        F.col("vec_id").alias("doc_id"), F.row_number().over(w2).alias("cos_rank")
-    )
+    cs = rank_rows(
+        cs, [F.desc("cosine"), F.asc("vec_id")], "vec_id", "cos_rank"
+    ).withColumnRenamed("vec_id", "doc_id")
     fused = bm.join(cs, "doc_id", "full_outer")
     contrib = lambda r: F.coalesce(1.0 / (F.lit(float(rrf_k)) + F.col(r)), F.lit(0.0))  # noqa: E731
     return (

@@ -33,7 +33,7 @@ reciprocals computed identically in both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bitfunnel_spark.operators.similarity import (
@@ -41,6 +41,7 @@ from bitfunnel_spark.operators.similarity import (
     cosine_expr,
 )
 from bitfunnel_spark.plans.dsl import DslError, _require, compile_dsl
+from bitfunnel_spark.plans.serving import rank_rows
 
 
 def _vec_literal(qv: list[float]) -> Column:
@@ -293,11 +294,8 @@ def rrf_search(
     for i, (kind, conf) in enumerate(retrievers):
         if kind == "standard":
             hits = index.search(compile_dsl(conf), k=window, mode=mode)
-            ranked.append(hits.select(
-                "doc_id",
-                F.row_number()
-                .over(Window.orderBy(F.desc("score"), F.asc("doc_id")))
-                .alias(f"r_{i}"),
+            ranked.append(rank_rows(
+                hits, [F.desc("score"), F.asc("doc_id")], "doc_id", f"r_{i}"
             ))
         else:
             kn = knn_search(emb, {"knn": {
@@ -307,12 +305,9 @@ def rrf_search(
                 "num_candidates": max(conf["num_candidates"], window),
                 **({"filter": conf["filter"]} if conf["filter"] is not None else {}),
             }})
-            ranked.append(kn.select(
-                F.col("vec_id").alias("doc_id"),
-                F.row_number()
-                .over(Window.orderBy(F.desc("cosine"), F.asc("vec_id")))
-                .alias(f"r_{i}"),
-            ))
+            ranked.append(rank_rows(
+                kn, [F.desc("cosine"), F.asc("vec_id")], "vec_id", f"r_{i}"
+            ).withColumnRenamed("vec_id", "doc_id"))
     fused = ranked[0]
     for nxt in ranked[1:]:
         fused = fused.join(nxt, "doc_id", "full_outer")

@@ -51,6 +51,36 @@ def test_multi_term_topk_parity(tiny_block_index, q, k):
     assert a == b
 
 
+def test_page_and_restriction_route_parity(tiny_block_index, monkeypatch):
+    """A search_after page and a tombstone + fact query return the same
+    rows on the in-process route (the default at these footprints) as on
+    the distributed route, and match the DataFrame executor."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    from bitfunnel_spark.plans import kernel
+
+    idx = dataclasses.replace(tiny_block_index, facts={})
+    idx.define_fact("even", F.col("doc_id") % 2 == 0)
+    rows = lambda df: [(r["doc_id"], r["score"]) for r in df.collect()]  # noqa: E731
+    p1 = rows(idx.search("dup | the", k=5, mode="kernel"))
+    cursor = (float(p1[-1][1]), int(p1[-1][0]))
+    victim = rows(idx.search("data fast", k=10, mode="kernel", facts=["even"]))[0][0]
+    deleted = dataclasses.replace(idx, tombstones=frozenset({victim}))
+    page2 = idx.search_after("dup | the", cursor, k=5)
+    assert "FlatMapGroupsInPandas" not in page2._jdf.queryExecution().executedPlan().toString()
+    local = (rows(page2), rows(deleted.search("data fast", k=10, mode="kernel", facts=["even"])))
+    assert p1 + local[0] == rows(idx.search("dup | the", k=10, mode="kernel"))
+    assert local[1] == rows(deleted.search("data fast", k=10, mode="dataframe", facts=["even"]))
+    assert victim not in [d for d, _ in local[1]]
+    monkeypatch.setattr(kernel, "LOCAL_BLOCK_BUDGET", -1)
+    assert (
+        rows(idx.search_after("dup | the", cursor, k=5)),
+        rows(deleted.search("data fast", k=10, mode="kernel", facts=["even"])),
+    ) == local
+
+
 def _biggest_group_raw(index, stream_terms):
     """raw dict ({(stream, term): rows}) for the (shard, slice) group holding
     the most blocks of the given terms — a unit harness for the wand kernels."""

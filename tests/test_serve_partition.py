@@ -25,7 +25,16 @@ def _query_side_plan(df) -> str:
     return s.split("InMemoryRelation")[0]  # above the cached store only
 
 
-def test_no_exchange_on_query_side(served):
+@pytest.fixture()
+def distributed(monkeypatch):
+    """Every query over budget: small queries take the distributed route,
+    whose plan shape these tests pin."""
+    from bitfunnel_spark.plans import kernel
+
+    monkeypatch.setattr(kernel, "LOCAL_BLOCK_BUDGET", -1)
+
+
+def test_no_exchange_on_query_side(served, distributed):
     plan = _query_side_plan(served["idx"].search("data the", k=5, mode="kernel"))
     assert "Exchange" not in plan
     assert "FlatMapGroupsInPandas" in plan
@@ -40,7 +49,7 @@ def test_results_identical_after_prepare_serve(served):
         assert got == want, q
 
 
-def test_batch_path_also_exchange_free(served):
+def test_batch_path_also_exchange_free(served, distributed):
     df = served["idx"].search_many(["data the", "data -slow"], k=5)
     # batch groups by the same key; its query side may keep the final
     # per-query ranking exchange (windowed top-k) but must not re-shuffle

@@ -502,9 +502,12 @@ def test_hybrid_search_vs_oracle(index, duck, spark, q, qid):
     assert all(s > 0 for _, s, _, _ in got)
 
 
-def test_hybrid_rank_semantics(index, spark):
+def test_hybrid_rank_semantics(index, spark, unpartitioned_windows):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    rows = serving.hybrid_search(index, emb, "data fast", 7, k=50, k_each=10).collect()
+    fused = serving.hybrid_search(index, emb, "data fast", 7, k=50, k_each=10)
+    # both arms are ranked without a single-partition window
+    assert unpartitioned_windows(fused) == 0
+    rows = fused.collect()
     # ranks are 1..k_each and at least one doc carries a NULL rank on one side
     for r in rows:
         for rank in (r["bm25_rank"], r["cos_rank"]):

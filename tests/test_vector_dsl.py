@@ -124,11 +124,14 @@ def _rrf_body(qv, std_query, window=20, size=10, rank_constant=60):
     }
 
 
-def test_rrf_fuses_both_retrievers(spark, index, emb):
+def test_rrf_fuses_both_retrievers(spark, index, emb, unpartitioned_windows):
     qv = _qv(emb)
     std = {"match": {"content": "data fast"}}
     window = 20
-    got = rrf_search(index, emb, _rrf_body(qv, std, window=window)).collect()
+    fused = rrf_search(index, emb, _rrf_body(qv, std, window=window))
+    # retriever ranks come without a single-partition window
+    assert unpartitioned_windows(fused) == 0
+    got = fused.collect()
     assert len(got) == 10
 
     # recompute expected fusion from the two retrievers' own outputs
